@@ -2057,7 +2057,9 @@ object Oracles {
 
     // triangle census of the q31 contact graph: canonical a<b edges,
     // wedges closed by the oriented (a,b)+(b,c)+(a,c) join; counts
-    // exact, clustering = one double division 3T/W
+    // exact, clustering = one double division 3T/W. n_wedges is
+    // COALESCEd to 0 here and in q378-q380: sum() over an empty edge set
+    // is NULL, and the engine's triangle stats report 0 there
     "q239_triangles" ->
       """WITH contacts AS (
         | SELECT c_custkey,
@@ -2077,7 +2079,7 @@ object Oracles {
         | GROUP BY 1),
         |ds AS (
         | SELECT count(*) AS n_nodes,
-        |  sum(deg * (deg - 1) // 2) AS n_wedges FROM deg),
+        |  COALESCE(sum(deg * (deg - 1) // 2), 0) AS n_wedges FROM deg),
         |m AS (SELECT count(*) AS n_edges FROM e),
         |tr AS (
         | SELECT count(*) AS n_triangles
@@ -9474,7 +9476,7 @@ object Oracles {
         | GROUP BY 1),
         |ds AS (
         | SELECT count(*) AS n_nodes,
-        |  sum(deg * (deg - 1) // 2) AS n_wedges FROM deg),
+        |  COALESCE(sum(deg * (deg - 1) // 2), 0) AS n_wedges FROM deg),
         |m AS (SELECT count(*) AS n_edges FROM e),
         |tr AS (
         | SELECT count(*) AS n_triangles
@@ -9512,7 +9514,7 @@ object Oracles {
         | GROUP BY 1),
         |ds AS (
         | SELECT count(*) AS n_nodes,
-        |  sum(deg * (deg - 1) // 2) AS n_wedges FROM deg),
+        |  COALESCE(sum(deg * (deg - 1) // 2), 0) AS n_wedges FROM deg),
         |m AS (SELECT count(*) AS n_edges FROM e),
         |o AS (
         | SELECT CASE WHEN da < db OR (da = db AND a < b)
@@ -9566,7 +9568,7 @@ object Oracles {
         | GROUP BY 1),
         |ds AS (
         | SELECT count(*) AS n_nodes,
-        |  sum(deg * (deg - 1) // 2) AS n_wedges FROM deg),
+        |  COALESCE(sum(deg * (deg - 1) // 2), 0) AS n_wedges FROM deg),
         |m AS (SELECT count(*) AS n_edges FROM e),
         |tr AS (
         | SELECT count(*) AS n_triangles

@@ -11,10 +11,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   */
 object Sinks {
 
-  /** Append-mode raw-layer write (O-4's sink side). */
-  def appendRaw(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(path)
-
   /** Partitioned fact write. `partitionCols` become directory levels;
     * dynamic overwrite replaces only the partitions present in `df`, so
     * an incremental day-load never rewrites history. */

@@ -109,10 +109,6 @@ object CleaningRules {
     Rule(value, g.isin("m", "male", "f", "female"))
   }
 
-  /** R-9: trim/collapse/TitleCase only (no master validation).
-    * Reference: cleaning_rules.py:172-176. */
-  def cleanState(c: Column): Rule = cleanName(c)
-
   /** R-10: strip currency symbols/commas, abs negatives (flagged).
     * Null semantics per reference (cleaning_rules.py:177-190): missing/empty
     * -> 0.0 flagged; non-empty but unparseable after stripping -> NULL

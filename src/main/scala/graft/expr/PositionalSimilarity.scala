@@ -112,6 +112,9 @@ object GraftFunctions {
   def textMetrics(text: Column): Column =
     shim.column(TextMetrics(shim.expression(text)))
 
+  def langIdSplit(text: Column): Column =
+    shim.column(LangIdSplit(shim.expression(text)))
+
   def vectorDot(a: Column, b: Column): Column =
     shim.column(VectorDot(shim.expression(a), shim.expression(b)))
 

@@ -17,7 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * and re-splits the text once per metric (q15 walked every document 8+
   * times). This kernel computes all six metrics in one walk and must stay
   * value-identical — TextMetricsParitySpec pins every field to the Column
-  * forms on edge cases and generated corpora. Parity notes:
+  * forms on edge cases and generated corpora. Language ID (`lang` here and
+  * [[langIdSplit]]'s three fields) has no Column form in the engine: its
+  * spec is the marker-hit CASE chain in TextMetricsParitySpec, which the
+  * oracles replay in SQL. Parity notes:
   *  - lowering goes through UTF8String.toLowerCase (what `lower()` does),
   *    not java.lang.String.toLowerCase (locale-sensitive);
   *  - lengths count code points (what `length()` returns);
@@ -31,13 +34,42 @@ object TextMetricsKernel {
     graft.operators.TextOps.stopwords.foreach(s.add)
     s
   }
-  private lazy val markers: Array[(UTF8String, java.util.HashSet[String])] =
-    graft.operators.TextOps.langMarkers.map { case (code, words) =>
-      val s = new java.util.HashSet[String]()
-      words.foreach(s.add)
-      (UTF8String.fromString(code), s)
-    }.toArray
+  private lazy val langCodes: Array[UTF8String] =
+    graft.operators.TextOps.langMarkers.map(m => UTF8String.fromString(m._1)).toArray
+  /** Marker word -> indices (in langMarkers order) of every language
+    * listing it: "la" is both es and fr. */
+  private lazy val markerLangs: java.util.HashMap[String, Array[Int]] = {
+    val m = new java.util.HashMap[String, Array[Int]]()
+    graft.operators.TextOps.langMarkers.zipWithIndex
+      .flatMap { case ((_, words), l) => words.map(_ -> l) }
+      .groupBy(_._1).foreach { case (w, ls) => m.put(w, ls.map(_._2).toArray) }
+    m
+  }
   private val UND = UTF8String.fromString("und")
+
+  /** Adds one hit to each language that lists `tok` as a marker. */
+  private def addMarkerHits(tok: String, hits: Array[Int]): Unit = {
+    val ls = markerLangs.get(tok)
+    if (ls != null) {
+      var j = 0
+      while (j < ls.length) { hits(ls(j)) += 1; j += 1 }
+    }
+  }
+
+  /** THE language-ID rule: the first language (langMarkers order) whose
+    * hits are >= every later language's hits, i.e. the first index of the
+    * max; zero hits in total -> "und". */
+  private def langOf(hits: Array[Int]): UTF8String = {
+    var total = 0
+    var best = 0
+    var i = 0
+    while (i < hits.length) {
+      total += hits(i)
+      if (hits(i) > hits(best)) best = i
+      i += 1
+    }
+    if (total == 0) UND else langCodes(best)
+  }
 
   def compute(text: UTF8String): InternalRow = {
     val s = text.toString
@@ -60,16 +92,12 @@ object TextMetricsKernel {
     // (lower() then re-tokenize, exactly like the Column forms)
     val toksLower = ShingleKernel.splitTokens(text.toLowerCase.toString)
     var stops = 0
-    val hits = new Array[Int](markers.length)
+    val hits = new Array[Int](langCodes.length)
     i = 0
     while (i < toksLower.length) {
       val t = toksLower(i)
       if (stopSet.contains(t)) stops += 1
-      var l = 0
-      while (l < markers.length) {
-        if (markers(l)._2.contains(t)) hits(l) += 1
-        l += 1
-      }
+      addMarkerHits(t, hits)
       i += 1
     }
     val stopRatio =
@@ -79,19 +107,28 @@ object TextMetricsKernel {
         (if (punctRatio > 0.10) 25 else 0) +
         (if (stopRatio < 0.02 || stopRatio > 0.60) 25 else 0) +
         (if (meanLen < 2.0 || meanLen > 12.0) 25 else 0))
-    // langId: first language whose hits >= every later language's hits
-    // (== first index of the max, TextOps.langId's CASE chain); 0 -> und
-    var total = 0
-    var best = 0
-    i = 0
-    while (i < hits.length) {
-      total += hits(i)
-      if (hits(i) > hits(best)) best = i
+    new GenericInternalRow(Array[Any](
+      nTokens, punctRatio, stopRatio, meanLen, quality, langOf(hits)))
+  }
+
+  /** Split-half language ID in one walk over the lowered tokens: marker
+    * hits of the first ceil(n/2) tokens (head) and of the rest (tail);
+    * the whole document's hits are their sum. Returns
+    * struct(lang_full, lang_head, lang_tail). */
+  def langIdSplit(text: UTF8String): InternalRow = {
+    val toks = ShingleKernel.splitTokens(text.toLowerCase.toString)
+    val half = (toks.length + 1) / 2
+    val head = new Array[Int](langCodes.length)
+    val tail = new Array[Int](langCodes.length)
+    var i = 0
+    while (i < toks.length) {
+      addMarkerHits(toks(i), if (i < half) head else tail)
       i += 1
     }
-    val lang = if (total == 0) UND else markers(best)._1
-    new GenericInternalRow(Array[Any](
-      nTokens, punctRatio, stopRatio, meanLen, quality, lang))
+    val full = new Array[Int](langCodes.length)
+    i = 0
+    while (i < full.length) { full(i) = head(i) + tail(i); i += 1 }
+    new GenericInternalRow(Array[Any](langOf(full), langOf(head), langOf(tail)))
   }
 
   /** Overlapping token-window chunks, one pass — the native twin of
@@ -145,6 +182,31 @@ case class TextMetrics(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.expr.TextMetricsKernel.compute($c)")
 
   override protected def withNewChildInternal(newChild: Expression): TextMetrics =
+    copy(child = newChild)
+}
+
+/** Native split-half language ID: struct(lang_full, lang_head,
+  * lang_tail) over the lowered whitespace tokens, halves split at
+  * ceil(n/2) tokens. */
+case class LangIdSplit(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"lang_id_split expects string, got ${child.dataType.simpleString}")
+  override def dataType: DataType = StructType(Seq(
+    StructField("lang_full", StringType, nullable = false),
+    StructField("lang_head", StringType, nullable = false),
+    StructField("lang_tail", StringType, nullable = false)))
+  override def prettyName: String = "lang_id_split"
+
+  override protected def nullSafeEval(t: Any): Any =
+    TextMetricsKernel.langIdSplit(t.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.expr.TextMetricsKernel.langIdSplit($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): LangIdSplit =
     copy(child = newChild)
 }
 

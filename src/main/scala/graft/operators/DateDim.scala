@@ -21,12 +21,6 @@ object DateDim {
       explode(sequence(lit(start), lit(end), expr("interval 1 day"))).as("full_date"))
       .transform(withCalendarAttrs)
 
-  /** Build dim_date spanning the min..max of `dateCol` in `df`. */
-  def fromColumn(df: DataFrame, dateCol: String): DataFrame =
-    df.select(min(col(dateCol).cast("date")).as("lo"), max(col(dateCol).cast("date")).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"), expr("interval 1 day"))).as("full_date"))
-      .transform(withCalendarAttrs)
-
   /** date_key = y*10000 + m*100 + d (reference db.py:68-69) + calendar attrs. */
   def withCalendarAttrs(df: DataFrame): DataFrame = {
     val d = col("full_date")

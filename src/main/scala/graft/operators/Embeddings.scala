@@ -255,19 +255,6 @@ object Embeddings {
       .select(col(idCol), array(projCols: _*).as("proj"))
   }
 
-  /** Convenience: fit + project + per-component rounded output, one row
-    * per input embedding: (idCol, pc1..pck rounded to 4). Rounded for
-    * stable display; the value oracle for this family is the covariance
-    * query (hash-green) + the PcaSpec properties, per the q55/q146
-    * float-means convention. */
-  def pcaReduce(df: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val (comps, _) = pcaComponents(df, vecCol, k)
-    val mv = means(df, vecCol).collect().sortBy(_.getInt(0)).map(_.getDouble(1))
-    val projected = pcaProject(df, idCol, vecCol, comps, mv)
-    val cols = (0 until k).map(c => round(col("proj")(c), 4).as(s"pc${c + 1}"))
-    projected.select(col(idCol) +: cols: _*)
-  }
-
   /** MERGEABLE covariance sufficient statistics — the incremental form of
     * [[covariance]]: a bounded (d(d+1)/2 + d + 1)-row frame of exact
     * DECIMAL sums that can be persisted per batch/partition/day and

@@ -171,13 +171,6 @@ object Knn {
       when(proj > 0, shiftleft(lit(1L), p)).otherwise(0L)
     }.reduce((a, b) => a.bitwiseOR(b))
 
-  /** Sign-bit bucket id from `numPlanes` random hyperplanes: bit p is 1 iff
-    * dot(vec, plane_p) > 0. Vectors in the same bucket are likely close in
-    * angle (classic SRP-LSH). Column form — for bulk bucketing use
-    * [[withSrpBucket]] (higher-order functions are interpreted per plane). */
-  def srpBucket(vec: Column, numPlanes: Int): Column =
-    srpBits(vec, numPlanes, planeComponent)
-
   /** Bulk SRP bucketing: posexplode the vectors once and compute every
     * plane projection in ONE codegen'd hash aggregation (map-side partial
     * agg, so the shuffle carries one row per vector per partition), then

@@ -435,7 +435,15 @@ object Robust {
     * heavy-tailed monitoring metrics. Summands are rounded to 6 and
     * DECIMAL-summed (the q99 discipline) so both means are
     * cross-engine exact. Output: (groupCol, n, lo_cut, hi_cut,
-    * trimmed_mean, winsorized_mean). */
+    * trimmed_mean, winsorized_mean); `n` counts the group's rows, NULL
+    * values included.
+    *
+    * `trimmed_mean` is NULL when no non-null value lies in
+    * [lo_cut, hi_cut]: the group {1.0, 10.0} at 0.1/0.9 interpolates its
+    * cuts to 1.9 and 9.1, so neither value is inside (its winsorized
+    * mean is 5.5, the mean of the two clamped values). When every value
+    * in the group is NULL, the cuts, `trimmed_mean` and `winsorized_mean`
+    * are all NULL. */
   def trimmedStats(df: DataFrame, groupCol: String, valueCol: String,
                    trimLo: Double = 0.1, trimHi: Double = 0.9): DataFrame = {
     require(trimLo >= 0 && trimHi <= 1 && trimLo < trimHi,

@@ -206,27 +206,18 @@ object TextOps {
     "de" -> Seq("der", "die", "und", "das", "ist"),
     "zh" -> Seq("的", "是", "了", "在", "我"))
 
-  /** Count of marker hits for one language. */
-  def markerHits(toks: Column, markers: Seq[String]): Column =
-    size(filter(toks, t => t.isin(markers: _*)))
+  /** Split-half language ID over the lowered whitespace tokens, one walk
+    * per document: struct(lang_full, lang_head, lang_tail), the halves
+    * split at ceil(n/2) tokens. Each field is the argmax of marker-word
+    * hits; ties break by position in [[langMarkers]] order (the
+    * first-max-wins rule, mirrored in SQL by a CASE chain); zero hits ->
+    * "und" (undetermined), NULL text included. */
+  def langIdSplit(text: Column): Column =
+    graft.expr.GraftFunctions.langIdSplit(coalesce(text, lit("")))
 
-  /** Heuristic language-ID: argmax of marker-word hits; ties break by
-    * position in [[langMarkers]] order (a fixed priority chain, trivially
-    * mirrored by a SQL CASE); zero hits -> "und" (undetermined). */
-  def langId(text: Column): Column = {
-    val toks = tokens(lower(text))
-    val hits = langMarkers.map { case (code, markers) => code -> markerHits(toks, markers) }
-    // First branch whose hits >= every later language's hits wins — the
-    // standard first-max-wins CASE chain, byte-for-byte mirrorable in SQL.
-    val chain = hits.zipWithIndex.foldLeft(when(lit(false), "und")) {
-      case (acc, ((code, h), i)) =>
-        val laterGeq = hits.drop(i + 1).map(_._2)
-          .foldLeft(lit(true))((ok, later) => ok && h >= later)
-        acc.when(laterGeq, code)
-    }
-    val total = hits.map(_._2).reduce(_ + _)
-    when(total === 0, "und").otherwise(chain)
-  }
+  /** Heuristic language-ID of the whole text: [[langIdSplit]]'s
+    * lang_full. */
+  def langId(text: Column): Column = langIdSplit(text).getField("lang_full")
 
   /** Split-half code-switching audit: language-ID the first and second
     * halves of each document separately and flag documents whose halves
@@ -236,22 +227,18 @@ object TextOps {
     * wrong in every bucket). Halves split at ceil(n/2) tokens; the
     * whole-doc [[langId]] rides along for context.
     *
-    * Scale shape: pure per-row kernels (token slice + two marker-count
-    * folds), no shuffle. Output: (idCol, lang_full, lang_head,
-    * lang_tail, is_switch). */
+    * Scale shape: one native per-row kernel ([[langIdSplit]]), no
+    * shuffle. Output: (idCol, lang_full, lang_head, lang_tail,
+    * is_switch). */
   def codeSwitchAudit(df: org.apache.spark.sql.DataFrame, idCol: String,
-                      textCol: String): org.apache.spark.sql.DataFrame = {
-    val toks = tokens(lower(col(textCol)))
-    val half = ceil(size(toks).cast("double") / 2.0).cast("int")
-    // slice clamps past the end, so length = full size is safe for the tail
-    val head = concat_ws(" ", slice(toks, lit(1), half))
-    val tail = concat_ws(" ", slice(toks, half + lit(1), size(toks)))
-    df.select(col(idCol), langId(col(textCol)).as("lang_full"),
-        langId(head).as("lang_head"), langId(tail).as("lang_tail"))
+                      textCol: String): org.apache.spark.sql.DataFrame =
+    // one projection of the struct, unpacked above it: reading its fields
+    // in the same select would put one kernel call per field in the plan
+    df.select(col(idCol), langIdSplit(col(textCol)).as("__lang"))
+      .select(col(idCol), col("__lang.*"))
       .withColumn("is_switch",
         col("lang_head") =!= "und" && col("lang_tail") =!= "und" &&
           col("lang_head") =!= col("lang_tail"))
-  }
 
   /** Lexicon screen: per-document hit counts against a word list (the
     * blocklist/toxicity-lexicon pre-filter every pipeline runs BEFORE

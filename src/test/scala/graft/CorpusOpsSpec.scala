@@ -447,6 +447,22 @@ class CorpusOpsSpec extends SparkSpec {
     assert(r.getAs[Long]("n") == 11L)
   }
 
+  test("trimmedStats: NULL trimmed mean when no value is inside the cuts or all are NULL") {
+    val vals = Seq(("a", Some(1.0)), ("a", Some(10.0)), ("b", None), ("b", None))
+      .toDF("g", "v")
+    val r = graft.operators.Robust.trimmedStats(vals, "g", "v")
+      .orderBy("g").collect()
+    // {1.0, 10.0}: cuts 1.9 and 9.1 leave no value inside
+    assert(math.abs(r(0).getAs[Double]("lo_cut") - 1.9) < 1e-9)
+    assert(math.abs(r(0).getAs[Double]("hi_cut") - 9.1) < 1e-9)
+    assert(r(0).isNullAt(r(0).fieldIndex("trimmed_mean")))
+    assert(r(0).getAs[Double]("winsorized_mean") == 5.5)
+    // all-NULL group: no cuts, no means; n still counts its rows
+    Seq("lo_cut", "hi_cut", "trimmed_mean", "winsorized_mean")
+      .foreach(f => assert(r(1).isNullAt(r(1).fieldIndex(f)), f))
+    assert(r(1).getAs[Long]("n") == 2L)
+  }
+
   // -------------------------------------------------- provenance union
 
   test("provenanceUnion: dropped members' sources fold into the representative's record") {
