@@ -7,7 +7,7 @@ object Bench {
     * Measurement protocol (the round-6 adjudication fix): each query runs
     * ONE untimed warm rep immediately before its timed reps. First-touch
     * costs that belong to a FAMILY, not a query — the session IVF index
-    * builds (Queries.ivfCache), the shared portable pair chain, EduFlow
+    * builds (operators.SessionCache), the shared portable pair chain, EduFlow
     * pipeline staging, SQL view registration, codegen compilation — land
     * in the warm rep, so the timed medians measure steady-state query
     * cost no matter how the registry happens to sort. The warm time is

@@ -694,13 +694,15 @@ object Sketch {
     // .distinct: the old rank-join form merged duplicate basis points in
     // its groupBy — one output row per distinct bp, preserved here
     val bps = quantilesBp.distinct
-    val withEsts = bps.foldLeft(cum) { (d, bp) =>
+    // one select for every __est_<bp> column: a withColumn per basis
+    // point would re-analyze the growing plan once per column
+    val withEsts = cum.select(col("*") +: bps.map { bp =>
       val r = s"(CAST($bp AS BIGINT) * n + 9999) DIV 10000"
-      d.withColumn(s"__est_$bp",
-        when(col("cum") >= expr(r) && col("cum_before") < expr(r),
-          (col("bin") * binWidthCents +
-            expr(s"$binWidthCents * (($r) - cum_before) DIV cnt")) / 100.0))
-    }
+      when(col("cum") >= expr(r) && col("cum_before") < expr(r),
+        (col("bin") * binWidthCents +
+          expr(s"$binWidthCents * (($r) - cum_before) DIV cnt")) / 100.0)
+        .as(s"__est_$bp")
+    }: _*)
     withEsts.selectExpr(
         s"stack(${bps.size}, " +
           bps.map(bp => s"$bp, __est_$bp").mkString(", ") +

@@ -10,7 +10,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * captures per-action wall time, output rows and failures; the scrape
   * surface is a DataFrame snapshot (joinable into the run report / metadata
   * logs) instead of an HTTP endpoint. Spark's own task/stage metrics remain
-  * available underneath via the usual status APIs.
+  * available underneath via the usual status APIs. Session-cache reuse
+  * (per family: hits and build seconds) is its own snapshot,
+  * `graft.operators.SessionCache.snapshot(spark)`.
   */
 /** One completed SQL action (top-level for Encoder derivation). */
 final case class ActionMetric(action: String, duration_ms: Long,
